@@ -771,6 +771,7 @@ def q_sessionize(spark, sf_dir):
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName(name).trigger(availableNow=True).start())
     q.awaitTermination(300)
+    q.stop()
     return spark.table(name).select(
         "user_id", "session_start", "session_end", "n_events",
         F.round("total_value", 6).alias("total_value"))

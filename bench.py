@@ -41,13 +41,12 @@ Headline workload (mirrors the north-star pipeline at bench scale):
                          as a LATENCY metric so it can't masquerade as
                          throughput in either direction
 
-Set SPARK_STREAM_SRC to a pre-built corpus directory (scripts/scaling.py
-does this once per run) so both parallelism levels of a scaling pair read
-byte-identical input files.
+Set SPARK_STREAM_SRC to a pre-built corpus directory so repeated runs
+(e.g. at two parallelism levels) read byte-identical input files.
 
 Derived metrics reported: points/sec for the reverse geocode, docs/sec for
 the pipeline, plus hw_miters_per_s — a ~2 s raw-CPU burn at 1 and $CPUS
-processes (the scripts/scaling.py probe kernel) embedded in the JSON so
+processes (a raw-CPU probe kernel) embedded in the JSON so
 every recorded bench carries the hardware state it ran under. This host
 is multi-tenant and its per-core speed moves ±30-50% between rounds
 (e.g. 2026-08-17: 8.45→6.06 Miters/s single-core, 157→72 at 32 procs
@@ -72,9 +71,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-# Raw-CPU probe kernel + iteration count, shared with scripts/scaling.py
-# (which imports BOTH from here) so the bench-embedded probe and the
-# scaling gate always measure the identical kernel.
+# Raw-CPU probe kernel + iteration count for the bench-embedded hardware
+# probe.
 BURN_N = 3_000_000
 
 
@@ -88,9 +86,8 @@ def _burn(n: int) -> float:
 
 def _hw_probe(levels: tuple = (1,), n: int = BURN_N) -> dict:
     """Raw-CPU throughput (total million-iterations/s) of this host at each
-    process count — the same burn kernel scripts/scaling.py gates on. Runs
-    once per bench (~2 s) and is embedded in the output JSON so recorded
-    benches disclose the hardware state they ran under (this host is
+    process count. Runs once per bench (~2 s) and is embedded in the output
+    JSON so recorded benches disclose the hardware state they ran under (this host is
     multi-tenant; per-core speed varies ±30-50% across rounds)."""
     import multiprocessing as mp
     out = {}

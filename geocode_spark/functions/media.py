@@ -1697,7 +1697,7 @@ def decode_image(data: bytes) -> np.ndarray:
 
 
 def decode_media_meta(payload: bytes, strict: bool = False) -> dict:
-    """The default ``decode_fn`` for ``with_media_meta``: REAL metadata
+    """The decoder behind ``with_media_meta``: REAL metadata
     from real decoders. Images report (width, height); audio reports
     duration_ms; anything unrecognized — or recognized-but-corrupt when
     ``strict`` is False — classifies as plain 'binary' with only

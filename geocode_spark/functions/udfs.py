@@ -13,10 +13,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..cells import cell_of, kring
+from ..cells import cell_of
 from ..crs import bng_to_latlon, latlon_to_bng
 
 _LATLON = StructType([StructField("lat", DoubleType()),
@@ -65,16 +64,6 @@ def cell_ij_udf(res: int):
         return pd.DataFrame({"i": i, "j": j})
 
     return _ij
-
-
-def kring_udf(k: int):
-    """kring(cell) -> array<long> of the (2k+1)^2 neighbour disc."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _kring(cell: pd.Series) -> pd.Series:
-        return cell.map(lambda c: kring(int(c), k).tolist())
-
-    return _kring
 
 
 # UK postcode grammar (public GOV.UK spec): outward = area letters + district,

@@ -7,9 +7,8 @@ shuffle-minimal:
 
 * exact_dedup          — hash-groupBy on a content fingerprint (one shuffle)
 * minhash_signatures   — shingle -> minhash inside a pandas UDF (no shuffle)
-* lsh_candidate_pairs  — band -> bucket self-join (shuffle on band-hash; the
-                         classic MinHash-LSH plan: only bucket-colliding
-                         pairs are ever materialized)
+* minhash_dedup_pairs  — band -> bucket walk (shuffle on band-hash; only
+                         bucket-colliding pairs are ever materialized)
 * simhash              — 64-bit simhash of token multiset (no shuffle)
 * ngram_jaccard_pairs  — exact verification of candidate pairs
 * embedding_cosine_pairs — near-dup via cosine over an embedding column
@@ -67,8 +66,8 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
 
 
 def _drop_hot_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Stop-bucket skew guard shared by every LSH-style blocker
-    (minhash bands, simhash chunks, inverted-index grams): rows whose
+    """Stop-bucket skew guard shared by the self-join blockers (simhash
+    chunks, inverted-index grams): rows whose
     bucket (grouped on ``keys``) exceeds ``cap`` are dropped BEFORE the
     self-join, because pair blowup per bucket is quadratic. The standard
     trade: pairs in dropped buckets are recovered only through their other
@@ -126,55 +125,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         return pd.Series(out)
 
     return df.withColumn("signature", sig(F.col(text_col)))
-
-
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        bands: int = 16, rows_per_band: int = 4,
-                        max_bucket_size: int | None = None,
-                        sig_len: int | None = None) -> DataFrame:
-    """MinHash-LSH: band the signature, bucket-join, emit candidate pairs
-    (a < b). Shuffle key = (band, band_hash) — uniform by construction.
-
-    ``max_bucket_size`` is the skew guard: buckets larger than the cap are
-    dropped before the self-join (pair blowup per bucket is quadratic; a
-    boilerplate-heavy web corpus can put millions of near-identical docs in
-    one bucket — the standard practice is to drop or sub-sample stop-buckets
-    and let the remaining bands recover the pairs).
-
-    ``sig_len``, when given, validates that the banding actually covers real
-    signature positions — slicing past the end of the signature array would
-    give every document an identical empty-band hash (a corpus-wide bucket
-    and an O(n^2) join)."""
-    if sig_len is not None and bands * rows_per_band > sig_len:
-        raise ValueError(
-            f"bands({bands}) * rows_per_band({rows_per_band}) exceeds the "
-            f"signature length {sig_len}: out-of-range bands hash every "
-            "document into one bucket")
-    assert bands * rows_per_band <= 1024
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(i), F.slice("signature", i * rows_per_band + 1,
-                                             rows_per_band))
-                for i in range(bands)
-            ])
-        ).alias("band", "band_hash"),
-    )
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, ["band", "band_hash"],
-                                   max_bucket_size)
-    l = banded.alias("l")
-    r = banded.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.band_hash") == F.col("r.band_hash"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return pairs
 
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
@@ -510,7 +460,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     (pigeonhole: distance<=3 pairs share at least one of 4 chunks).
 
     ``max_bucket_size`` is the same skew guard as
-    ``lsh_candidate_pairs``: (chunk_pos, chunk) buckets larger than the cap
+    ``minhash_dedup_pairs``: (chunk_pos, chunk) buckets larger than the cap
     are dropped BEFORE the self-join, because pair blowup per bucket is
     quadratic — a boilerplate-heavy web corpus concentrates near-identical
     simhashes, and at 10^12 docs an average 16-bit bucket would hold

@@ -13,8 +13,8 @@ real resampled image bytes and ``frame_sample`` slices block-aligned
 PCM segments, evenly sampled MJPEG frames (each a standalone decodable
 JPEG) or raw MPEG audio frames. MP3 features fall back to the byte
 histogram (frame headers give exact duration but PCM synthesis is out
-of codec scope); every hook stays pluggable (``decode_fn=`` /
-``feature_fn=`` / ``resize_fn=`` / ``frame_fn=``) for deployments that
+of codec scope); the feature, resize and frame hooks stay pluggable
+(``feature_fn=`` / ``resize_fn=`` / ``frame_fn=``) for deployments that
 ship PIL/ffmpeg.
 
 ``strict=True`` makes corrupt payloads (right magic, bad structure)
@@ -33,7 +33,6 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
@@ -52,47 +51,22 @@ MEDIA_META_SCHEMA = StructType([
 ])
 
 
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic TEST DOUBLE (the pre-round-4 stub, kept so plumbing
-    tests can run without constructing valid media bytes): derives
-    metadata purely from payload byte counts. Production default is the
-    real ``functions.media.decode_media_meta``."""
-    if payload is None:
-        return {"media_type": None, "n_bytes": 0, "width": None,
-                "height": None, "duration_ms": None}
-    n = len(payload)
-    head = bytes(payload[:4])
-    if head.startswith(b"\x89PN") or head.startswith(b"\xff\xd8"):
-        mt = "image"
-    elif head.startswith(b"RIFF") or head.startswith(b"ID3"):
-        mt = "audio"
-    else:
-        mt = "binary"
-    return {"media_type": mt, "n_bytes": n,
-            "width": int(n % 1920) + 1, "height": int((n * 7) % 1080) + 1,
-            "duration_ms": int(n % 60000)}
-
-
 def with_media_meta(df: DataFrame, binary_col: str = "html",
-                    decode_fn: Callable[[bytes], dict] | None = None,
                     strict: bool = False) -> DataFrame:
     """Add a typed ``media`` struct decoded from an opaque binary column.
 
-    Default decoder is the real stdlib codec layer: BMP/PNG payloads get
+    The decoder is the real stdlib codec layer: BMP/PNG payloads get
     pixel (width, height), WAV payloads get sample-accurate duration_ms,
     anything else is ``binary`` with n_bytes only. ``strict=True``
     raises ``MediaFormatError`` on corrupt media instead of downgrading.
     """
-    if decode_fn is None:
-        fn = lambda payload: decode_media_meta(payload, strict=strict)  # noqa: E731
-    else:
-        fn = decode_fn
     out_schema = StructType(df.schema.fields
                             + [StructField("media", MEDIA_META_SCHEMA)])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            metas = [fn(b) for b in pdf[binary_col]]
+            metas = [decode_media_meta(b, strict=strict)
+                     for b in pdf[binary_col]]
             out = pdf.copy()
             out["media"] = metas
             yield out

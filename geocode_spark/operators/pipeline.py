@@ -9,7 +9,7 @@ constituency / GSP regions (cell-index + ray-cast), and emit one row per
 byte-identical per url (invariant).
 
 Plan shape: scan -> codegen'd extract+explode -> BroadcastHashJoin (CPO) ->
-groupBy(url, postcode) partial-agg -> mapInPandas (cell+PIP) -> sink. The
+groupBy(url, postcode) partial-agg -> mapInArrow (cell+PIP) -> sink. The
 only shuffle is the per-(url,postcode) aggregation of multi-unit matches;
 everything else pipelines with the scan — at 10^12 docs the job is
 embarrassingly parallel and skew-free (no hot join key ever shuffles:

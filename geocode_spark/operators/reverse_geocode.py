@@ -16,10 +16,12 @@ Re-expresses the reference's computational core
 
 Two physical strategies, both shuffle-free on the candidate side:
 
-* ``fused`` (default): one ``mapInPandas`` pass per partition — cell encode,
+* ``fused`` (default): one ``mapInArrow`` pass per partition — cell encode,
   candidate probe against the broadcast cover map, ray-cast, dedup, and kNN
-  fallback all inside a single Arrow batch. Zero shuffles; the plan is
-  scan -> mapInPandas -> (sink). Skew-proof: no shuffle keys exist.
+  fallback all inside a single Arrow batch, over numpy arrays and int
+  region codes (pass-through columns never leave Arrow). Zero shuffles; the
+  plan is scan -> mapInArrow -> (sink). Skew-proof: no shuffle keys exist.
+  ``reverse_geocode_multi`` is the same pass with several region sets.
 * ``join``: Catalyst-visible BroadcastHashJoin of points vs the covering-cell
   map, then mapInPandas PIP on candidates, then one aggregation shuffle per
   row_id. Useful when the candidate set should be materialized / audited.
@@ -36,6 +38,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
@@ -65,11 +69,10 @@ class _CoverIndex:
     cache: same candidates, same keep-first ordering, same kernels.
     """
 
-    __slots__ = ("cover", "geoms", "cells", "starts", "cand_rid", "cand_seq",
-                 "cand_interior", "rids", "bbox", "_pp", "_knn")
+    __slots__ = ("geoms", "cells", "starts", "cand_rid", "cand_seq",
+                 "cand_interior", "rids", "names", "bbox", "_pp", "_knn")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
-        self.cover = cover    # strong refs pin the id()-based cache key
         self.geoms = geoms
         if cover is None or len(cover) == 0:
             z = np.empty(0, np.int64)
@@ -78,11 +81,11 @@ class _CoverIndex:
             self.cand_rid = z
             self.cand_seq = z
             self.cand_interior = np.empty(0, bool)
-            self.rids = np.empty(0, object)
+            self.rids = []
         else:
             cells = cover["cell"].to_numpy(np.int64)
             codes, rids = pd.factorize(cover["region_id"])
-            self.rids = np.asarray(rids, dtype=object)
+            self.rids = list(rids)
             order = np.argsort(cells, kind="stable")
             sc = cells[order]
             first = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
@@ -91,6 +94,8 @@ class _CoverIndex:
             self.cand_rid = np.asarray(codes, np.int64)[order]
             self.cand_seq = cover["region_seq"].to_numpy(np.int64)[order]
             self.cand_interior = cover["interior"].to_numpy(bool)[order]
+        # region code -> id, gathered per batch with pyarrow.compute.take
+        self.names = pa.array(self.rids, pa.string())
         self.bbox = [geoms[r][3] for r in self.rids]
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
         self._knn = None
@@ -102,97 +107,86 @@ class _CoverIndex:
             pp = self._pp[r] = PreparedPolygon(xs, ys, offs)
         return pp
 
-    def lookup(self, pcells: np.ndarray):
-        """cells -> (pt, slot): pt indexes the probe arrays, slot the
-        candidate arrays (one row per matching cover entry)."""
-        if len(self.cells) == 0 or len(pcells) == 0:
-            z = np.empty(0, np.int64)
-            return z, z
-        loc = np.searchsorted(self.cells, pcells)
-        np.minimum(loc, len(self.cells) - 1, out=loc)
-        h = np.flatnonzero(self.cells[loc] == pcells)
-        s = self.starts[loc[h]]
-        cnt = self.starts[loc[h] + 1] - s
-        tot = int(cnt.sum())
-        if tot == 0:
-            z = np.empty(0, np.int64)
-            return z, z
-        slot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]], cnt) \
-            + np.arange(tot, dtype=np.int64)
-        return np.repeat(h, cnt), slot
-
     def knn_table(self):
         """Deduplicated (cell -> region) table for the ring expansion,
         cover-row order preserved within each cell (tie parity with the
         previous merge-based probe)."""
         if self._knn is None:
-            if self.cover is None or len(self.cover) == 0:
-                z = np.empty(0, np.int64)
-                self._knn = (z, np.zeros(1, np.int64), z)
-            else:
-                small = self.cover[["cell", "region_id"]].drop_duplicates()
-                kcells = small["cell"].to_numpy(np.int64)
-                rmap = {r: i for i, r in enumerate(self.rids)}
-                krid = small["region_id"].map(rmap).to_numpy(np.int64)
-                order = np.argsort(kcells, kind="stable")
-                sc = kcells[order]
-                first = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-                self._knn = (sc[first],
-                             np.r_[first, len(sc)].astype(np.int64),
-                             krid[order])
+            # keep-first (cell, region) over the cell-sorted candidate
+            # arrays, which hold cover-row order within each cell
+            grp = np.repeat(np.arange(len(self.cells)), np.diff(self.starts))
+            _, first = np.unique(grp * max(len(self.rids), 1) + self.cand_rid,
+                                 return_index=True)
+            first.sort()
+            self._knn = (self.cells,
+                         np.searchsorted(grp[first],
+                                         np.arange(len(self.cells) + 1)),
+                         self.cand_rid[first])
         return self._knn
 
 
-# Per-worker index cache: (id(cover), id(geoms)) -> _CoverIndex. Strong refs
-# inside the index pin both id()s (no stale-alias risk); python workers are
-# single-threaded per process, so no lock. FIFO-bounded — the index is a few
+def _probe(keys: np.ndarray, starts: np.ndarray, probe: np.ndarray):
+    """Equi-probe of sorted unique ``keys`` whose entries span
+    ``starts[i]:starts[i+1]`` -> (pt, slot): pt indexes ``probe``, slot the
+    grouped arrays, one pair per matching entry."""
+    if len(keys) == 0 or len(probe) == 0:
+        z = np.empty(0, np.int64)
+        return z, z
+    loc = np.searchsorted(keys, probe)
+    np.minimum(loc, len(keys) - 1, out=loc)
+    h = np.flatnonzero(keys[loc] == probe)
+    s = starts[loc[h]]
+    cnt = starts[loc[h] + 1] - s
+    slot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]], cnt) \
+        + np.arange(int(cnt.sum()), dtype=np.int64)
+    return np.repeat(h, cnt), slot
+
+
+# Per-worker cache of structures derived from broadcast values, keyed by
+# the values' id()s. Each entry holds strong refs to its broadcast values,
+# which pins those id()s (no stale-alias risk); python workers are
+# single-threaded per process, so no lock. FIFO-bounded — an index is a few
 # MB (ints parallel to the cover rows + edge tables), entries only turn over
 # when a worker serves many distinct region sets.
 _INDEX_CACHE: OrderedDict = OrderedDict()
 _INDEX_CACHE_SIZE = 4
 
 
-def _get_prepared_geoms(geoms: dict) -> dict:
-    """Per-worker lazy {region_id -> PreparedPolygon} cache for code paths
-    that carry only the geometry broadcast (join strategy). Same FIFO bound
-    and id-pinning discipline as _get_index."""
-    key = ("geoms", id(geoms))
+def _worker_cached(tag: str, values: tuple, build):
+    key = (tag, *map(id, values))
     hit = _INDEX_CACHE.get(key)
-    if hit is not None and hit[0] is geoms:
+    if hit is not None and all(a is b for a, b in zip(hit[0], values)):
         _INDEX_CACHE.move_to_end(key)
         return hit[1]
-    entry = (geoms, {})
-    _INDEX_CACHE[key] = entry
+    out = build(*values)
+    _INDEX_CACHE[key] = (values, out)
     while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
         _INDEX_CACHE.popitem(last=False)
-    return entry[1]
+    return out
 
 
 def _get_index(cover: pd.DataFrame, geoms: dict) -> _CoverIndex:
-    key = (id(cover), id(geoms))
-    hit = _INDEX_CACHE.get(key)
-    if hit is not None and hit.cover is cover and hit.geoms is geoms:
-        _INDEX_CACHE.move_to_end(key)
-        return hit
-    idx = _CoverIndex(cover, geoms)
-    _INDEX_CACHE[key] = idx
-    while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
-        _INDEX_CACHE.popitem(last=False)
-    return idx
+    return _worker_cached("index", (cover, geoms), _CoverIndex)
+
+
+def _get_prepared_geoms(geoms: dict) -> dict:
+    """Lazy {region_id -> PreparedPolygon} for code paths that carry only
+    the geometry broadcast (join strategy)."""
+    return _worker_cached("geoms", (geoms,), lambda _geoms: {})
 
 
 def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
                   res: int) -> np.ndarray:
-    """One batch of finite points -> object array of region ids (None=miss).
+    """One batch of finite points -> int64 region codes (-1 = miss).
 
     Same pipeline as before, all-numpy: covering-cell probe, interior-cell
     raster shortcut, bbox prefilter + bucketed ray-cast per region for
     boundary candidates, keep-first (min region_seq) per point — GeoPandas
     keep-first parity (utilities.py:268-269)."""
-    rid_out = np.full(len(lat), None, dtype=object)
-    pt, slot = index.lookup(cell_of(lat, lon, res))
+    code = np.full(len(lat), -1, np.int64)
+    pt, slot = _probe(index.cells, index.starts, cell_of(lat, lon, res))
     if len(pt) == 0:
-        return rid_out
+        return code
     inside = index.cand_interior[slot].copy()
     bnd = np.flatnonzero(~inside)
     if bnd.size:
@@ -220,22 +214,21 @@ def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
         inside[bnd] = ok
     hit = np.flatnonzero(inside)
     if hit.size == 0:
-        return rid_out
+        return code
     hp = pt[hit]
     hs = index.cand_seq[slot[hit]]
     o = np.lexsort((hs, hp))
     keep = np.r_[True, hp[o][1:] != hp[o][:-1]]
     sel = hit[o[keep]]
-    rid_out[pt[sel]] = index.rids[index.cand_rid[slot[sel]]]
-    return rid_out
+    code[pt[sel]] = index.cand_rid[slot[sel]]
+    return code
 
 
-def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
-                  index: _CoverIndex, res: int, max_distance: float,
-                  max_k: int | None = None,
-                  metric: bool = False) -> pd.DataFrame:
+def _knn_fallback(px: np.ndarray, py: np.ndarray, index: _CoverIndex,
+                  res: int, max_distance: float, metric: bool = False):
     """Ring-expansion bounded nearest-region (sjoin_nearest semantics,
-    utilities.py:270-284).
+    utilities.py:270-284): points -> (int64 region codes, distances), code
+    -1 where no region lies within ``max_distance``.
 
     Distance unit: degrees (prep space) when ``metric=False``, METRES when
     ``metric=True`` (local equirectangular scaling — the reference's
@@ -249,10 +242,10 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
     inside the already-searched radius (no closer region can appear in a
     later ring)."""
     n = np.int64(1) << res
-    out_rid = np.full(len(miss_pos), None, dtype=object)
-    out_dist = np.full(len(miss_pos), np.inf)
+    out_code = np.full(len(px), -1, np.int64)
+    out_dist = np.full(len(px), np.inf)
     _, ci, cj = cell_to_ij(cell_of(py, px, res))
-    unresolved = np.arange(len(miss_pos))
+    unresolved = np.arange(len(px))
     # conservative per-ring guarantee radius uses the SMALLER (lat) step
     cell_deg = 180.0 / float(n)
     if metric:
@@ -262,14 +255,13 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
         cos_pt = np.maximum(np.cos(np.radians(py)), 1e-3)
         ring_scale = METERS_PER_DEG * np.minimum(1.0, 2.0 * cos_pt)
     else:
-        ring_scale = np.ones(len(miss_pos))
-    if max_k is None:
-        # enough rings that safe_radius(max_k) >= max_distance for the
-        # slowest point: a region inside the bound can never be missed by
-        # early exhaustion (sjoin_nearest(max_distance) parity)
-        worst = float(ring_scale.min()) if len(miss_pos) else 1.0
-        max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
-        max_k = min(max(max_k, 1), 4096)
+        ring_scale = np.ones(len(px))
+    # enough rings that safe_radius(max_k) >= max_distance for the slowest
+    # point: a region inside the bound can never be missed by early
+    # exhaustion (sjoin_nearest(max_distance) parity)
+    worst = float(ring_scale.min()) if len(px) else 1.0
+    max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
+    max_k = min(max(max_k, 1), 4096)
     kcells, kstarts, krid = index.knn_table()
     n_rids = max(len(index.rids), 1)
     dist_fn = dist_to_polygon_m_prepared if metric else dist_to_polygon_prepared
@@ -298,16 +290,9 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
         ring_cells = cell_from_ij(ii.ravel(), jj.ravel(), res)
         if len(kcells) == 0:
             break
-        loc = np.searchsorted(kcells, ring_cells)
-        np.minimum(loc, len(kcells) - 1, out=loc)
-        h = np.flatnonzero(kcells[loc] == ring_cells)
-        if h.size:
-            s = kstarts[loc[h]]
-            cnt = kstarts[loc[h] + 1] - s
-            tot = int(cnt.sum())
-            kslot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]],
-                              cnt) + np.arange(tot, dtype=np.int64)
-            pu = np.repeat(u_rep[h], cnt)
+        hp, kslot = _probe(kcells, kstarts, ring_cells)
+        if hp.size:
+            pu = u_rep[hp]
             prid = krid[kslot]
             # dedup (point, region) keep-first; then visit regions in
             # first-appearance order — equal-distance ties resolve exactly
@@ -332,17 +317,13 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
                 better = d < out_dist[uu]
                 upd = uu[better]
                 out_dist[upd] = d[better]
-                out_rid[upd] = index.rids[r]
+                out_code[upd] = r
         safe_radius = (k - 0.5) * cell_deg * 0.5 * ring_scale[unresolved]
         done = (out_dist[unresolved]
                 <= np.minimum(max_distance, safe_radius))
         unresolved = unresolved[~done]
-    valid = out_dist <= max_distance
-    return pd.DataFrame({
-        "__pos": miss_pos[valid],
-        "region_id": out_rid[valid],
-        "dist": out_dist[valid],
-    })
+    out_code[~(out_dist <= max_distance)] = -1
+    return out_code, out_dist
 
 
 # (SparkContext id, PreparedRegions id) -> (sc, prep, cover b., geoms b.).
@@ -415,6 +396,16 @@ def _broadcast_prep(sc, prep: "PreparedRegions"):
     return b_cover, b_geoms
 
 
+def _is_metric(prep: PreparedRegions, distance_unit: str | None) -> bool:
+    """True for metre distances. Default unit = the regions' source CRS
+    units (reference parity, utilities.py:253-255)."""
+    if distance_unit is None:
+        distance_unit = "m" if prep.crs == "EPSG:27700" else "deg"
+    if distance_unit not in ("m", "deg"):
+        raise ValueError("distance_unit must be 'm' or 'deg'")
+    return distance_unit == "m"
+
+
 def reverse_geocode(
     points: DataFrame,
     prep: PreparedRegions,
@@ -445,23 +436,16 @@ def reverse_geocode(
     WGS84-sourced region set). Metre distances use a local equirectangular
     scaling (geometry.dist_to_polygon_m).
 
+    Coordinates are read as float64; a NULL or non-finite (NaN, ±inf)
+    coordinate gives a NULL assignment (and NULL ``cell_id``).
+
     ``salt_partitions``: pre-repartition the points on a salted hash — use
     when the upstream partitioning is spatially clustered (e.g. a crawl
     sharded by site puts all of London in a few partitions). The fused path
     has no shuffle of its own, so skew only enters through input layout;
     salting rebalances it at the cost of one explicit shuffle.
     """
-    spark = points.sparkSession
-    sc = spark.sparkContext
-    b_cover, b_geoms = _broadcast_prep(sc, prep)
-    res = prep.res
-
-    if distance_unit is None:
-        # reference parity: unit = the regions' source CRS units
-        distance_unit = "m" if prep.crs == "EPSG:27700" else "deg"
-    if distance_unit not in ("m", "deg"):
-        raise ValueError("distance_unit must be 'm' or 'deg'")
-    metric = distance_unit == "m"
+    metric = _is_metric(prep, distance_unit)
 
     if salt_partitions:
         # deterministic salt key only: a nondeterministic component (e.g.
@@ -476,57 +460,9 @@ def reverse_geocode(
                                     F.col(lat_col), F.col(lon_col))
 
     if strategy == "fused":
-        keep_fields = (points.schema.fields if output_cols is None else
-                       [f for f in points.schema.fields
-                        if f.name in output_cols])
-        out_fields = keep_fields + [StructField(out_col, StringType())]
-        if keep_cell:
-            out_fields = out_fields + [StructField("cell_id", LongType())]
-        if keep_distance:
-            out_fields = out_fields + [StructField("knn_dist", DoubleType())]
-        out_schema = StructType(out_fields)
-        in_cols = [f.name for f in keep_fields]
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            index = _get_index(b_cover.value, b_geoms.value)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lat_all = pdf[lat_col].to_numpy(np.float64)
-                lon_all = pdf[lon_col].to_numpy(np.float64)
-                finite = np.isfinite(lat_all) & np.isfinite(lon_all)
-                rid = np.full(len(pdf), None, dtype=object)
-                vpos = np.flatnonzero(finite)
-                if vpos.size:
-                    rid[vpos] = _assign_batch(index, lat_all[vpos],
-                                              lon_all[vpos], res)
-                kdist = np.full(len(pdf), np.nan)
-                if max_distance is not None:
-                    miss = np.flatnonzero(pd.isna(rid) & finite)
-                    if len(miss):
-                        near = _knn_fallback(miss, lon_all[miss], lat_all[miss],
-                                             index, res, max_distance,
-                                             metric=metric)
-                        npos = near["__pos"].to_numpy()
-                        rid[npos] = near["region_id"].to_numpy()
-                        kdist[npos] = near["dist"].to_numpy()
-                out = pdf[in_cols].copy()
-                out[out_col] = rid
-                if keep_distance:
-                    # nullable Float64 so no-match rows surface as SQL NULL
-                    # (a plain float column would ship NaN through Arrow)
-                    kd = pd.array(kdist, dtype="Float64")
-                    kd[np.isnan(kdist)] = pd.NA
-                    out["knn_dist"] = kd
-                if keep_cell:
-                    cid = np.full(len(pdf), None, dtype=object)
-                    if finite.any():
-                        cid[finite] = cell_of(lat_all[finite], lon_all[finite], res)
-                    out["cell_id"] = pd.array(cid, dtype="Int64")
-                yield out
-
-        return points.mapInPandas(run, schema=out_schema)
-
+        return _reverse_geocode_fused(
+            points, [(prep, out_col, max_distance, metric)], lat_col, lon_col,
+            output_cols, keep_cell, keep_distance)
     if strategy == "join":
         if max_distance is not None or output_cols is not None or keep_distance:
             raise ValueError(
@@ -552,11 +488,11 @@ def reverse_geocode_multi(
     ``distance_unit`` (same semantics as :func:`reverse_geocode`).
 
     At 100 TB this is the difference between k full-data passes (chained
-    reverse_geocode calls: k mapInPandas stages, the points crossing the
+    reverse_geocode calls: k Python stages, the points crossing the
     JVM/Python boundary and re-decoding coordinates k times) and one: a
     single Python stage reuses the decoded coordinate arrays for every
-    lookup. Same per-lookup kernels (_assign_batch / _knn_fallback over the
-    shared _CoverIndex), so assignments match the chained form exactly.
+    lookup. It is the same loop as :func:`reverse_geocode`, so assignments
+    match the chained form exactly.
 
     ``keep_cell`` adds one ``cell_id`` column at the FIRST assignment's
     resolution (the chained equivalent of keep_cell on the first call)."""
@@ -564,68 +500,80 @@ def reverse_geocode_multi(
         # fail on the driver, not inside an executor task (keep_cell=True
         # would otherwise call cell_of(..., res=None) at run time)
         raise ValueError("assignments must name at least one prepared set")
-    spark = points.sparkSession
-    sc = spark.sparkContext
     specs = []
     for a in assignments:
-        prep, out_col = a[0], a[1]
         opts = a[2] if len(a) > 2 else {}
-        unit = opts.get("distance_unit") or (
-            "m" if prep.crs == "EPSG:27700" else "deg")
-        if unit not in ("m", "deg"):
-            raise ValueError("distance_unit must be 'm' or 'deg'")
-        b_cover, b_geoms = _broadcast_prep(sc, prep)
-        specs.append((b_cover, b_geoms, prep.res, (prep.name, prep.crs),
-                      out_col, opts.get("max_distance"), unit == "m"))
+        specs.append((a[0], a[1], opts.get("max_distance"),
+                      _is_metric(a[0], opts.get("distance_unit"))))
+    return _reverse_geocode_fused(points, specs, lat_col, lon_col,
+                                  output_cols, keep_cell, False)
+
+
+def _reverse_geocode_fused(points, specs, lat_col, lon_col, output_cols,
+                           keep_cell, keep_distance) -> DataFrame:
+    """The one fused pass: a ``mapInArrow`` stage that assigns every spec
+    ``(prep, out_col, max_distance, metric)`` to each batch. Pass-through
+    columns go straight from the input batch to the output batch; the
+    kernels return int region codes (-1 = miss) and region ids are gathered
+    once per spec with ``pyarrow.compute.take``. ``cell_id`` and
+    ``knn_dist`` describe the FIRST spec."""
+    sc = points.sparkSession.sparkContext
+    bspecs = [(*_broadcast_prep(sc, prep), prep.res, max_d, metric)
+              for prep, _, max_d, metric in specs]
     keep_fields = (points.schema.fields if output_cols is None else
                    [f for f in points.schema.fields
                     if f.name in output_cols])
-    out_fields = (keep_fields
-                  + [StructField(s[4], StringType()) for s in specs])
+    out_fields = keep_fields + [StructField(s[1], StringType()) for s in specs]
     if keep_cell:
-        out_fields = out_fields + [StructField("cell_id", LongType())]
+        out_fields.append(StructField("cell_id", LongType()))
+    if keep_distance:
+        out_fields.append(StructField("knn_dist", DoubleType()))
     out_schema = StructType(out_fields)
     in_cols = [f.name for f in keep_fields]
-    cell_res = specs[0][2] if specs else None
+    cell_res = specs[0][0].res
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Build (or fetch) every spec's index ONCE per stage and hold
         # direct references across batches: with more specs than the
         # FIFO cache holds, per-batch _get_index calls would thrash the
         # cache and re-sort every cover map on every batch.
-        indexes = [_get_index(s[0].value, s[1].value) for s in specs]
-        for pdf in batches:
-            if len(pdf) == 0:
+        indexes = [_get_index(s[0].value, s[1].value) for s in bspecs]
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
                 continue
-            out = pdf[in_cols].copy()
-            lat_all = pdf[lat_col].to_numpy(np.float64)
-            lon_all = pdf[lon_col].to_numpy(np.float64)
-            finite = np.isfinite(lat_all) & np.isfinite(lon_all)
+            # float64 coordinates, NULL -> NaN (non-finite => NULL result)
+            lat, lon = (pc.cast(rb.column(c), pa.float64(), safe=False)
+                        .to_numpy(zero_copy_only=False)
+                        for c in (lat_col, lon_col))
+            finite = np.isfinite(lat) & np.isfinite(lon)
             vpos = np.flatnonzero(finite)
-            for (b_cover, b_geoms, res, (name, crs), out_col, max_d,
-                 metric), index in zip(specs, indexes):
-                rid = np.full(len(pdf), None, dtype=object)
+            cols = [rb.column(c) for c in in_cols]
+            kdist = np.full(n, np.nan)
+            for k, ((_, _, res, max_d, metric), index) in enumerate(
+                    zip(bspecs, indexes)):
+                code = np.full(n, -1, np.int64)
                 if vpos.size:
-                    rid[vpos] = _assign_batch(index, lat_all[vpos],
-                                              lon_all[vpos], res)
+                    code[vpos] = _assign_batch(index, lat[vpos], lon[vpos],
+                                               res)
                 if max_d is not None:
-                    miss = np.flatnonzero(pd.isna(rid) & finite)
-                    if len(miss):
-                        near = _knn_fallback(
-                            miss, lon_all[miss], lat_all[miss],
-                            index, res, max_d, metric=metric)
-                        rid[near["__pos"].to_numpy()] = \
-                            near["region_id"].to_numpy()
-                out[out_col] = rid
+                    miss = np.flatnonzero((code < 0) & finite)
+                    if miss.size:
+                        near, dist = _knn_fallback(lon[miss], lat[miss],
+                                                   index, res, max_d, metric)
+                        code[miss] = near
+                        if k == 0:
+                            kdist[miss] = np.where(near >= 0, dist, np.nan)
+                cols.append(pc.take(index.names, pa.array(code, mask=code < 0)))
             if keep_cell:
-                cid = np.full(len(pdf), None, dtype=object)
-                if finite.any():
-                    cid[finite] = cell_of(lat_all[finite], lon_all[finite],
-                                          cell_res)
-                out["cell_id"] = pd.array(cid, dtype="Int64")
-            yield out
+                cid = np.zeros(n, np.int64)
+                cid[vpos] = cell_of(lat[vpos], lon[vpos], cell_res)
+                cols.append(pa.array(cid, mask=~finite))
+            if keep_distance:
+                cols.append(pa.array(kdist, mask=np.isnan(kdist)))
+            yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
 
-    return points.mapInPandas(run, schema=out_schema)
+    return points.mapInArrow(run, out_schema)
 
 
 def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):

@@ -224,19 +224,13 @@ def run_with_lineage(
         # replaces partitions that are actually written)
         bucketed = result.withColumn("bucket",
                                      _bucket_col(key_col, n_buckets))
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            # ONE distributed write job for every outstanding bucket;
-            # dynamic overwrite touches only the partitions being written
-            bucketed.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(str(out))
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+        # ONE distributed write job for every outstanding bucket; dynamic
+        # overwrite touches only the partitions being written. Set per
+        # write, never on the session: a concurrent caller's writes keep
+        # their own overwrite mode.
+        bucketed.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("bucket").parquet(str(out))
         dt = time.time() - t0
         for b in todo:
             rows = out.child(f"bucket={b}").parquet_rows()

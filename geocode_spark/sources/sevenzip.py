@@ -370,10 +370,6 @@ def _decode_streams(data: bytes, streams: dict) -> list[bytes]:
     return blobs
 
 
-def list_7z(path: str | Path) -> list[str]:
-    return list(read_7z(path).keys())
-
-
 def extract_member(path: str | Path, member: str) -> bytes:
     members = read_7z(path)
     if member not in members:

@@ -4,8 +4,11 @@ Spark lacks natively (SURVEY.md §2.9 note; the engine's only stateful op).
 
 Groups an event stream by user, maintains per-user session state (start,
 last-seen, count, value sum) and emits a session row whenever a gap larger
-than ``gap_seconds`` closes the session (or the state times out). Works
-identically over the testdata ``events`` table replayed as a stream.
+than ``gap_seconds`` closes the session. There is no state timeout: a
+session closes only when a later event for the same user exceeds the gap,
+so an ``availableNow`` query ends by itself once its input is drained, and
+the result never depends on wall-clock time. Works identically over the
+testdata ``events`` table replayed as a stream.
 """
 
 from __future__ import annotations
@@ -38,22 +41,13 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
                ts_col: str = "ts", user_col: str = "user_id",
                value_col: str = "value") -> DataFrame:
     """events (streaming or batch-test via ``foreachBatch``) -> closed
-    sessions. State key = user_id; a session closes when a new event
-    arrives more than ``gap_seconds`` after the last, or on timeout."""
+    sessions. State key = user_id; a session closes only when a new event
+    arrives more than ``gap_seconds`` after the last (each user's open
+    session stays in state)."""
     gap_us = gap_seconds * 1_000_000
 
     def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
         (user_id,) = key
-        if state.hasTimedOut:
-            start_us, last_us, n, total = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id,
-                "session_start": pd.Timestamp(start_us, unit="us"),
-                "session_end": pd.Timestamp(last_us, unit="us"),
-                "n_events": n, "total_value": total,
-            }])
-            return
         rows = pd.concat(list(pdfs)).sort_values(ts_col)
         ts_us = rows[ts_col].astype("datetime64[us]").astype("int64")
         vals = rows[value_col].astype(float).to_numpy()
@@ -74,7 +68,6 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
             total += float(v)
             last_us = t
         state.update((start_us, last_us, n, total))
-        state.setTimeoutDuration(gap_seconds * 1000)
         if closed:
             yield pd.DataFrame([{
                 "user_id": user_id,
@@ -85,4 +78,4 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
 
     return (events.groupBy(user_col).applyInPandasWithState(
         fn, outputStructType=SESSION_SCHEMA, stateStructType=STATE_SCHEMA,
-        outputMode="append", timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
+        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout))

@@ -296,3 +296,22 @@ class TestLineage:
         manifests = read_lineage(out)
         assert len(manifests) == 4
         assert all(m["committed"] for m in manifests)
+
+    def test_session_overwrite_mode_untouched(self, spark, tmp_path):
+        from geocode_spark.plans.lineage import run_with_lineage
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
+        df = spark.range(1000)
+        out = tmp_path / "lineage_out"
+        run_with_lineage(df, out, key_col="id", n_buckets=4,
+                         snapshot_id="snap1")
+        assert spark.conf.get(key) == before
+        # lose one manifest: the resume rewrites only that bucket, and the
+        # per-write dynamic overwrite keeps the other three on disk
+        (out / "_lineage" / "bucket=2.json").unlink()
+        r2 = run_with_lineage(df, out, key_col="id", n_buckets=4,
+                              snapshot_id="snap1")
+        assert [r.skipped for r in r2] == [True, True, False, True]
+        assert spark.conf.get(key) == before
+        assert spark.read.parquet(str(out)).count() == 1000

@@ -22,7 +22,12 @@ def test_sessionize_stream(spark, tmp_path):
     q = (out.writeStream.outputMode("append")
          .format("memory").queryName("sessions")
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    try:
+        # no state timeout: the availableNow query must end by itself
+        assert q.awaitTermination(300) is True
+        assert not q.isActive
+    finally:
+        q.stop()
     rows = spark.sql("select * from sessions").collect()
     # sessions only close when a later event exceeds the gap; the stream has
     # enough users/time-spread that some must close
