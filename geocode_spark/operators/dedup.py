@@ -175,10 +175,8 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     band-hash list columns are reshaped straight off the Arrow values
     buffers into (n, num_hashes)/(n, bands) numpy matrices and ids stay
     Arrow arrays end to end (pairs gathered with ``pyarrow.compute.take``)
-    — no per-row object materialization anywhere in the pass. Measured
-    interleaved A/B vs the previous mapInPandas walk at bench scale:
-    pass-only noop 1.50 -> 1.20 s, output verified row-identical
-    (exceptAll both directions empty on the 1,560,346-row bench output)."""
+    — no per-row object materialization anywhere in the pass. A null
+    signature list fails the walk with a ``ValueError`` naming the column."""
     if bands * rows_per_band > num_hashes:
         raise ValueError(
             f"bands({bands}) * rows_per_band({rows_per_band}) exceeds the "
@@ -295,18 +293,24 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                  pa.array(est[m])],
                 names=["id_a", "id_b", "jaccard_est"])
 
+        def matrix(rb, name):
+            # fixed-length list column: the Arrow values buffer reshaped,
+            # no per-row objects (flatten honors the array's offset, but
+            # silently drops null lists)
+            col = rb.column(name)
+            if col.null_count:
+                raise ValueError(f"minhash_dedup_pairs: {col.null_count} "
+                                 f"null list(s) in column {name!r}")
+            return np.asarray(col.flatten()).reshape(rb.num_rows, -1)
+
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
             cols = rb.schema.names
             ids_pa = rb.column(cols.index(id_col))
-            # fixed-length list columns: the Arrow values buffer reshaped,
-            # no per-row objects (flatten honors the array's offset)
-            S = np.asarray(rb.column(cols.index("signature")).flatten()) \
-                .reshape(n, -1)
-            H = np.asarray(rb.column(cols.index("__bh")).flatten()) \
-                .reshape(n, -1)
+            S = matrix(rb, "signature")
+            H = matrix(rb, "__bh")
             bands_a = np.asarray(rb.column(cols.index("band")))
             hashes_a = np.asarray(rb.column(cols.index("band_hash")))
             if carry is not None:

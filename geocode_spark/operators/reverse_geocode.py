@@ -11,7 +11,10 @@ Re-expresses the reference's computational core
   3. boundary-tie dedup keep-first                  -> min(region_seq) per row
      (region_seq = stable region input order, GeoPandas keep-first parity)
   4. bounded nearest for misses (sjoin_nearest)     -> k-ring expansion over
-     neighbour cells + exact point-to-polygon distance, take argmin
+     neighbour cells + exact point-to-polygon distance, take argmin; each
+     (point, region) pair is evaluated at most once, pairs whose bbox lower
+     bound exceeds max_distance or the point's best are skipped, and exact
+     distance ties go to the lowest region_seq (the keep-first rule of 3)
   5. NA -> None normalization                       -> SQL NULL natively
 
 Two physical strategies, both shuffle-free on the candidate side:
@@ -70,7 +73,8 @@ class _CoverIndex:
     """
 
     __slots__ = ("geoms", "cells", "starts", "cand_rid", "cand_seq",
-                 "cand_interior", "rids", "names", "bbox", "_pp", "_knn")
+                 "cand_interior", "rids", "rseq", "names", "bbox", "_pp",
+                 "_knn")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
         self.geoms = geoms
@@ -82,6 +86,7 @@ class _CoverIndex:
             self.cand_seq = z
             self.cand_interior = np.empty(0, bool)
             self.rids = []
+            self.rseq = z
         else:
             cells = cover["cell"].to_numpy(np.int64)
             codes, rids = pd.factorize(cover["region_id"])
@@ -94,9 +99,13 @@ class _CoverIndex:
             self.cand_rid = np.asarray(codes, np.int64)[order]
             self.cand_seq = cover["region_seq"].to_numpy(np.int64)[order]
             self.cand_interior = cover["interior"].to_numpy(bool)[order]
+            self.rseq = np.empty(len(rids), np.int64)  # region code -> seq
+            self.rseq[codes] = cover["region_seq"].to_numpy(np.int64)
         # region code -> id, gathered per batch with pyarrow.compute.take
         self.names = pa.array(self.rids, pa.string())
-        self.bbox = [geoms[r][3] for r in self.rids]
+        # (4, n_regions): rows x0, y0, x1, y1
+        self.bbox = np.array([geoms[r][3] for r in self.rids],
+                             np.float64).reshape(-1, 4).T
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
         self._knn = None
 
@@ -108,16 +117,12 @@ class _CoverIndex:
         return pp
 
     def knn_table(self):
-        """Deduplicated (cell -> region) table for the ring expansion,
-        cover-row order preserved within each cell (tie parity with the
-        previous merge-based probe)."""
+        """Deduplicated (cell -> region) table for the ring expansion."""
         if self._knn is None:
-            # keep-first (cell, region) over the cell-sorted candidate
-            # arrays, which hold cover-row order within each cell
+            # one entry per distinct (cell, region), grouped by cell
             grp = np.repeat(np.arange(len(self.cells)), np.diff(self.starts))
             _, first = np.unique(grp * max(len(self.rids), 1) + self.cand_rid,
                                  return_index=True)
-            first.sort()
             self._knn = (self.cells,
                          np.searchsorted(grp[first],
                                          np.arange(len(self.cells) + 1)),
@@ -201,7 +206,7 @@ def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
         for g0, g1 in zip(gb, ge):         # one ray-cast batch per polygon
             rows = order[g0:g1]
             r = int(rs[g0])
-            bb = index.bbox[r]
+            bb = index.bbox[:, r]
             pxg = px[rows]
             pyg = py[rows]
             in_bbox = ((pxg >= bb[0]) & (pxg <= bb[2])
@@ -224,11 +229,35 @@ def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
     return code
 
 
+# relative shrink of the bbox lower bound: float rounding can never lift
+# it above the exact kernel's distance
+_LB_MARGIN = 1.0 - 1e-9
+
+
+def _bbox_lb(px: np.ndarray, py: np.ndarray, bbox: np.ndarray,
+             metric: bool) -> np.ndarray:
+    """Lower bound of the exact point-to-polygon distance: the distance
+    from each point to a bounding box (``bbox`` rows x0, y0, x1, y1,
+    broadcast against the points), in the exact kernel's units — degrees,
+    or metres with x-gaps scaled by cos(lat_point) as
+    ``dist_to_polygon_m_prepared`` does. A polygon's boundary lies inside
+    its bbox, so no boundary point is nearer than the box."""
+    gx = np.maximum(np.maximum(bbox[0] - px, px - bbox[2]), 0.0)
+    gy = np.maximum(np.maximum(bbox[1] - py, py - bbox[3]), 0.0)
+    if metric:
+        return (np.hypot(gx * np.cos(np.radians(py)), gy)
+                * (METERS_PER_DEG * _LB_MARGIN))
+    return np.hypot(gx, gy) * _LB_MARGIN
+
+
 def _knn_fallback(px: np.ndarray, py: np.ndarray, index: _CoverIndex,
                   res: int, max_distance: float, metric: bool = False):
     """Ring-expansion bounded nearest-region (sjoin_nearest semantics,
     utilities.py:270-284): points -> (int64 region codes, distances), code
-    -1 where no region lies within ``max_distance``.
+    -1 where no region lies within ``max_distance``. Among regions at
+    exactly the same best distance the lowest ``region_seq`` wins (the
+    direct-hit keep-first rule), so a point's answer never depends on the
+    other points of its batch.
 
     Distance unit: degrees (prep space) when ``metric=False``, METRES when
     ``metric=True`` (local equirectangular scaling — the reference's
@@ -238,14 +267,28 @@ def _knn_fallback(px: np.ndarray, py: np.ndarray, index: _CoverIndex,
     Fully vectorized: each round k expands every unresolved point's
     neighbour disc at once (broadcasted i/j grids), one searchsorted probe
     against the index's (cell -> region) table, then per-region batched
-    exact distances. A point is final once its best distance is provably
-    inside the already-searched radius (no closer region can appear in a
-    later ring)."""
+    exact distances. Each (point, region) pair is considered once across
+    all rounds, and its exact distance is computed only when its bbox lower
+    bound (:func:`_bbox_lb`) is within both ``max_distance`` and the
+    point's best so far — a pruned pair can neither win nor tie. Points
+    whose bound to the whole region set's extent exceeds ``max_distance``
+    never enter the rings. A point is final once its best distance is
+    provably inside the already-searched radius (no closer region can
+    appear in a later ring)."""
     n = np.int64(1) << res
     out_code = np.full(len(px), -1, np.int64)
     out_dist = np.full(len(px), np.inf)
+    out_seq = np.full(len(px), np.iinfo(np.int64).max)
     _, ci, cj = cell_to_ij(cell_of(py, px, res))
-    unresolved = np.arange(len(px))
+    bbox = index.bbox
+    if bbox.shape[1] == 0:
+        return out_code, out_dist
+    extent = np.array([[bbox[0].min()], [bbox[1].min()],
+                       [bbox[2].max()], [bbox[3].max()]])
+    # a point farther than max_distance from the whole set's extent is a
+    # miss before any ring is probed
+    unresolved = np.flatnonzero(_bbox_lb(px, py, extent, metric)
+                                <= max_distance)
     # conservative per-ring guarantee radius uses the SMALLER (lat) step
     cell_deg = 180.0 / float(n)
     if metric:
@@ -263,7 +306,8 @@ def _knn_fallback(px: np.ndarray, py: np.ndarray, index: _CoverIndex,
     max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
     max_k = min(max(max_k, 1), 4096)
     kcells, kstarts, krid = index.knn_table()
-    n_rids = max(len(index.rids), 1)
+    n_rids = len(index.rids)
+    seen = np.empty(0, np.int64)  # sorted point * n_rids + region keys
     dist_fn = dist_to_polygon_m_prepared if metric else dist_to_polygon_prepared
     for k in range(1, max_k + 1):
         if len(unresolved) == 0:
@@ -288,36 +332,33 @@ def _knn_fallback(px: np.ndarray, py: np.ndarray, index: _CoverIndex,
         jj = np.clip(cj[unresolved, None] + dij[None, :, 1], 0, n - 1)
         u_rep = np.broadcast_to(unresolved[:, None], ii.shape).ravel()
         ring_cells = cell_from_ij(ii.ravel(), jj.ravel(), res)
-        if len(kcells) == 0:
-            break
         hp, kslot = _probe(kcells, kstarts, ring_cells)
-        if hp.size:
-            pu = u_rep[hp]
-            prid = krid[kslot]
-            # dedup (point, region) keep-first; then visit regions in
-            # first-appearance order — equal-distance ties resolve exactly
-            # as the previous pandas groupby(sort=False) iteration did
-            key = pu * n_rids + prid
-            _, fidx = np.unique(key, return_index=True)
-            fidx.sort()
-            pu = pu[fidx]
-            prid = prid[fidx]
-            urf, rfirst = np.unique(prid, return_index=True)
-            rank = np.empty(n_rids, np.int64)
-            rank[urf[np.argsort(rfirst)]] = np.arange(len(urf))
-            order = np.argsort(rank[prid], kind="stable")
-            ps = prid[order]
-            gb = np.flatnonzero(np.r_[True, ps[1:] != ps[:-1]])
-            ge = np.r_[gb[1:], len(ps)]
-            for g0, g1 in zip(gb, ge):
-                rows = order[g0:g1]
-                r = int(ps[g0])
-                uu = pu[rows]
-                d = dist_fn(px[uu], py[uu], index.prepared(r))
-                better = d < out_dist[uu]
-                upd = uu[better]
-                out_dist[upd] = d[better]
-                out_code[upd] = r
+        # (point, region) pairs not considered in an earlier round; a pair
+        # pruned now stays pruned (best distances only shrink)
+        key = np.unique(u_rep[hp] * n_rids + krid[kslot])
+        key = key[~np.isin(key, seen, assume_unique=True)]
+        seen = np.union1d(seen, key)
+        pu, prid = np.divmod(key, n_rids)
+        lb = _bbox_lb(px[pu], py[pu], bbox[:, prid], metric)
+        live = (lb <= max_distance) & (lb <= out_dist[pu])
+        pu = pu[live]
+        prid = prid[live]
+        order = np.argsort(prid, kind="stable")
+        ps = prid[order]
+        gb = np.flatnonzero(np.diff(ps, prepend=-1))
+        ge = np.r_[gb[1:], len(ps)]
+        for g0, g1 in zip(gb, ge):
+            rows = order[g0:g1]
+            r = int(ps[g0])
+            uu = pu[rows]
+            d = dist_fn(px[uu], py[uu], index.prepared(r))
+            best = out_dist[uu]
+            seq = index.rseq[r]
+            better = (d < best) | ((d == best) & (seq < out_seq[uu]))
+            upd = uu[better]
+            out_dist[upd] = d[better]
+            out_code[upd] = r
+            out_seq[upd] = seq
         safe_radius = (k - 0.5) * cell_deg * 0.5 * ring_scale[unresolved]
         done = (out_dist[unresolved]
                 <= np.minimum(max_distance, safe_radius))

@@ -51,6 +51,11 @@ def _seq_sqnorm(mat: np.ndarray) -> np.ndarray:
     return acc
 
 
+# brute_force_topk collects the query set to the driver and ships it in
+# every scoring task's closure: at most this many queries
+_MAX_QUERIES = 10_000
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:
@@ -69,8 +74,14 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     ``_seq_dot`` reproduces the JVM aggregate's exact operation order, and
     the null/ragged corner cases reproduce the old expression semantics
     (null or zero-norm vector -> 0.0; length-mismatched vector -> NULL
-    cosine, ranked after non-nulls exactly as the window always did)."""
-    q_rows = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
+    cosine, ranked after non-nulls exactly as the window always did).
+    More than ``_MAX_QUERIES`` queries raise a ``ValueError``."""
+    q_rows = (queries.select(F.col(query_id_col), F.col(vec_col))
+              .limit(_MAX_QUERIES + 1).collect())
+    if len(q_rows) > _MAX_QUERIES:
+        raise ValueError(
+            f"brute_force_topk collects its queries to the driver and takes "
+            f"at most {_MAX_QUERIES}; use lsh_topk or ivf_topk for more")
     spark = corpus.sparkSession
     id_f = corpus.schema[id_col]
     qid_f = queries.schema[query_id_col]

@@ -54,6 +54,23 @@ class TestDedup:
         # character-shingle jaccard of these texts is ~0.33
         assert 0.1 < est < 0.6
 
+    def test_minhash_null_signature_fails_fast(self, spark, monkeypatch):
+        from geocode_spark.operators import dedup
+        real = dedup.minhash_signatures
+
+        def one_null(df, *args, **kwargs):
+            sigs = real(df, *args, **kwargs)
+            return sigs.withColumn("signature", F.when(
+                F.col("doc_id") != 1, F.col("signature")))
+
+        monkeypatch.setattr(dedup, "minhash_signatures", one_null)
+        t = "the quick brown fox jumps over the lazy dog"
+        df = spark.createDataFrame([(0, t), (1, t), (2, t)],
+                                   "doc_id long, text string")
+        with pytest.raises(Exception,
+                           match=r"null list\(s\) in column 'signature'"):
+            minhash_dedup_pairs(df).collect()
+
     def test_simhash_hamming_near_zero_for_dups(self, spark, pages):
         pairs = simhash_near_pairs(simhash(pages), id_col="url", max_hamming=0)
         assert pairs.count() >= 50
@@ -177,6 +194,16 @@ class TestSimilarity:
         out = brute_force_topk(emb, q, k=5)
         top1 = {r.query_id: r.vec_id for r in out.filter("rank = 1").collect()}
         assert top1 == {0: 0, 1: 1, 2: 2}
+
+    def test_brute_force_query_cap(self, spark, emb, monkeypatch):
+        from geocode_spark.operators import similarity
+        monkeypatch.setattr(similarity, "_MAX_QUERIES", 3)
+        q = emb.filter(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        with pytest.raises(ValueError, match="at most 3"):
+            brute_force_topk(emb, q, k=5)
+        at_cap = brute_force_topk(emb, q.filter("query_id < 3"), k=5)
+        assert at_cap.filter("rank = 1").count() == 3
 
     def test_lsh_recall_vs_brute(self, spark, emb):
         q = emb.filter(F.col("vec_id") < 5).select(
