@@ -286,10 +286,10 @@ def main():
 
     def run_dup_clusters(n):
         """Connected components over chain-shaped pair edges: clusters of
-        16 docs linked as diameter-15 chains — the worst realistic shape
-        for label propagation (web dup clusters are small but chained
-        through near-dup intermediaries), converging in ~4 pointer-doubling
-        rounds. n nodes, ~15n/16 edges; every round is two shuffles."""
+        16 docs linked as diameter-15 chains (web dup clusters are small
+        but chained through near-dup intermediaries). n nodes, ~15n/16
+        edges: one range shuffle, a partition-local contraction and a
+        driver finish over the cross-partition residue."""
         from geocode_spark.operators.dedup import dup_clusters
 
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))
@@ -298,10 +298,8 @@ def main():
                  .select(F.col("id").alias("id_a"),
                          (F.col("id") + 1).alias("id_b"))
                  .repartition(CPUS * 2))
-        # convergence_check_every=1 (default) measured best here at BOTH
-        # core counts: batching rounds (k=2/3) saves driver latency but
-        # pays extra post-fixpoint shuffle rounds, a bad trade on this
-        # ~5-round chain workload (probe: 26.4s vs 29.4s at 2 cores)
+        # max_iters bounds only the distributed fallback loop, which this
+        # residue (far under the driver cap) never reaches
         return dup_clusters(nodes, pairs, max_iters=12).count()
 
     # ---- lineage no-op resume: recovery latency, not throughput --------

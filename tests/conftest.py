@@ -24,3 +24,14 @@ def fixture_dir(tmp_path_factory):
     if not (base / "pages.parquet").exists():
         fixtures.build_all(base)
     return base
+
+
+@pytest.fixture
+def uncoalesced(spark):
+    """Keep AQE from merging small shuffle partitions for one test, so a
+    tiny input still spreads over ``spark.sql.shuffle.partitions`` tasks."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)

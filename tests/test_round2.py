@@ -207,10 +207,8 @@ class TestDedupGuards:
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(5)], "src long, dst long")
         with pytest.raises(RuntimeError, match="converge"):
-            _propagate_loop(nodes, chain, max_iters=1, strict=True,
-                            convergence_check_every=1)
-        loop_ok = _propagate_loop(nodes, chain, max_iters=10, strict=True,
-                                  convergence_check_every=1)
+            _propagate_loop(nodes, chain, max_iters=1, strict=True)
+        loop_ok = _propagate_loop(nodes, chain, max_iters=10, strict=True)
         assert {r.label for r in loop_ok.collect()} == {0}
 
         pub = dup_clusters(
@@ -219,27 +217,97 @@ class TestDedupGuards:
                          F.col("dst").alias("id_b")), max_iters=1)
         assert {r.cluster_id for r in pub.collect()} == {0}
 
-    def test_dup_clusters_fallback_loop_path(self, spark, monkeypatch):
-        """Force the contracted residue over the driver cap so the
-        distributed fallback path runs, and check it matches the driver
-        finish on a cross-partition graph (single-partition edge layout
-        guarantees a non-empty residue is impossible, so spread edges)."""
+    @staticmethod
+    def _strided_graph(spark):
+        """Edges (i, i + 8) over 64 nodes, spread over 8 partitions: every
+        range partition shares nodes with the next, so the contracted
+        residue is never empty. Expected labels: i % 8."""
         import pyspark.sql.functions as F
 
-        from geocode_spark.operators.dedup import dup_clusters
-
         nodes = spark.range(64).select(F.col("id").alias("doc_id"))
-        pairs = (spark.range(63).filter((F.col("id") + 1) % 8 != 0)
-                 .select(F.col("id").alias("id_a"),
-                         (F.col("id") + 1).alias("id_b"))
+        pairs = (spark.range(56).select(F.col("id").alias("id_a"),
+                                        (F.col("id") + 8).alias("id_b"))
                  .repartition(8))
+        return nodes, pairs, {(i, i % 8) for i in range(64)}
+
+    @staticmethod
+    def _spy_fallback(monkeypatch, dedup):
+        calls = []
+        loop = dedup._propagate_loop
+        monkeypatch.setattr(dedup, "_propagate_loop",
+                            lambda *a: calls.append(1) or loop(*a))
+        return calls
+
+    def test_dup_clusters_fallback_loop_path(self, spark, uncoalesced,
+                                             monkeypatch):
+        """Force the contracted residue over the driver cap so the
+        distributed fallback path runs, and check it matches the driver
+        finish on a cross-partition graph."""
+        from geocode_spark.operators import dedup
+
+        nodes, pairs, want = self._strided_graph(spark)
+        loops = self._spy_fallback(monkeypatch, dedup)
         base = {(r.doc_id, r.cluster_id)
-                for r in dup_clusters(nodes, pairs).collect()}
-        monkeypatch.setenv("GEOCODE_CC_DRIVER_MAX_EDGES", "0")
+                for r in dedup.dup_clusters(nodes, pairs).collect()}
+        assert not loops
+        monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
         forced = {(r.doc_id, r.cluster_id)
-                  for r in dup_clusters(nodes, pairs).collect()}
-        assert forced == base
-        assert base == {(i, (i // 8) * 8) for i in range(64)}
+                  for r in dedup.dup_clusters(nodes, pairs).collect()}
+        assert loops == [1]
+        assert forced == base == want
+
+    def test_dup_clusters_fallback_engages_at_cap(self, spark, uncoalesced,
+                                                  monkeypatch):
+        """The driver finish takes a residue of exactly the cap's size and
+        the fallback takes one row more; the probe never reads more than
+        cap + 1 rows."""
+        from geocode_spark.operators import dedup
+
+        nodes, pairs, want = self._strided_graph(spark)
+        loops = self._spy_fallback(monkeypatch, dedup)
+        probed = []
+        to_arrow = type(nodes).toArrow
+
+        def spy_to_arrow(df):
+            tbl = to_arrow(df)
+            probed.append(tbl.num_rows)
+            return tbl
+
+        monkeypatch.setattr(type(nodes), "toArrow", spy_to_arrow)
+
+        def run(cap):
+            monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", cap)
+            return {(r.doc_id, r.cluster_id)
+                    for r in dedup.dup_clusters(nodes, pairs).collect()}
+
+        assert run(dedup._DRIVER_MAX_EDGES) == want and not loops
+        (R,) = probed
+        assert R > 0
+        assert run(R) == want and not loops
+        assert run(R - 1) == want and loops == [1]
+        assert probed == [R, R, R]
+
+    def test_dup_clusters_no_session_conf_writes(self, spark, uncoalesced,
+                                                 monkeypatch):
+        """Neither the driver finish nor the distributed fallback writes a
+        session conf."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        from geocode_spark.operators import dedup
+
+        nodes, pairs, want = self._strided_graph(spark)
+        loops = self._spy_fallback(monkeypatch, dedup)
+        writes = []
+        monkeypatch.setattr(RuntimeConfig, "set",
+                            lambda self, *a: writes.append(("set", a)))
+        monkeypatch.setattr(RuntimeConfig, "unset",
+                            lambda self, *a: writes.append(("unset", a)))
+        for cap, fallback in ((dedup._DRIVER_MAX_EDGES, []), (0, [1])):
+            monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", cap)
+            got = dedup.dup_clusters(nodes, pairs).collect()
+            assert {(r.doc_id, r.cluster_id) for r in got} == want
+            assert loops == fallback
+        assert writes == []
 
     def test_dup_clusters_ignores_edges_outside_nodes(self, spark):
         """Legacy semantics: a pair endpoint absent from ``nodes`` never
